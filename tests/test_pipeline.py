@@ -6,6 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from tsdat_spark.config import transcripts_spec
+from pyspark.sql.types import DateType
+
+from tsdat_spark.io.checkpoint import partition_manifests
 from tsdat_spark.io.writers import read_tier
 from tsdat_spark.pipeline import run_ingest, run_rollup_job
 from tsdat_spark.qc import QCContext, QualityManager, check_missing, check_monotonic
@@ -44,6 +47,38 @@ def test_ingest_e2e(raw, tmp_path):
     # dedup invariant: (conv_id, turn_idx) unique, stable text
     assert back.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
     assert len(res.manifests) >= 1
+    # manifests fingerprint the committed partitions; they must equal the
+    # fingerprint of the plan that was written
+    assert _fingerprints(res.manifests) == _fingerprints(
+        partition_manifests(res.df, ts_col=spec.ts_col))
+    # the schema sidecar reads back exactly what inference sees
+    inferred = raw.sparkSession.read.parquet(table)
+    assert back.schema == inferred.schema
+    assert back.schema["p_date"].dataType == DateType()
+    assert back.exceptAll(inferred).count() == 0 and inferred.exceptAll(back).count() == 0
+
+
+def _fingerprints(manifests):
+    return {m.partition: (m.n_rows, m.content_hash, m.qc_counters) for m in manifests}
+
+
+def test_ingest_manifests_cover_null_ts_rows(raw, tmp_path):
+    """Rows with a null ts are stored in the null partition; the manifests
+    read back from the committed data still cover them."""
+    df = raw.where(F.col("turn_idx") < 3).unionByName(
+        raw.where(F.col("turn_idx") == 3).withColumn("ts", F.lit(None).cast("timestamp")))
+    spec = transcripts_spec()
+    res = run_ingest(df, spec, QCContext(), [], dedup_keys=["conv_id", "turn_idx"],
+                     table_path=str(tmp_path / "std"))
+    assert None in {m.partition for m in res.manifests}
+    assert _fingerprints(res.manifests) == _fingerprints(
+        partition_manifests(res.df, ts_col=spec.ts_col))
+
+
+def _rebuilt_rows(spark, out, tier, days):
+    """Independent count of a tier's partitions rebuilt by one run."""
+    return (spark.read.parquet(f"{out}/tier_{tier}")
+            .where(F.col("p_date").cast("string").isin(days)).count())
 
 
 def test_rollup_job_resume(raw, tmp_path):
@@ -58,11 +93,15 @@ def test_rollup_job_resume(raw, tmp_path):
     t1d = read_tier(raw.sparkSession, f"{out}/tier_1d")
     assert t1m.count() == r1.metrics["tier_1m_rows"]
     assert 0 < t1d.count() < t1m.count()
+    for tier in ("1m", "1h", "1d"):
+        assert r1.metrics[f"tier_{tier}_rows"] == _rebuilt_rows(
+            raw.sparkSession, out, tier, r1.written_days)
 
-    # second run: nothing to do
+    # second run: nothing to do, so no tier reports rows
     r2 = run_rollup_job(turns, out)
     assert not r2.written_days
     assert sorted(r2.skipped_days) == sorted(r1.written_days)
+    assert not any(k.startswith("tier_") for k in r2.metrics)
 
     # re-aggregated 1h equals direct re-read (counts)
     total_raw = turns.count()
@@ -89,6 +128,11 @@ def test_rollup_job_crash_resume_builds_missing_tiers(raw, tmp_path):
     # resumed full run: base tier skipped, coarser tiers rebuilt
     r1 = run_rollup_job(turns, out)
     assert r1.written_days == []  # base tier was NOT recomputed
+    # metrics cover exactly the tiers rebuilt this run
+    assert "tier_1m_rows" not in r1.metrics
+    for tier in ("1h", "1d"):
+        assert r1.metrics[f"tier_{tier}_rows"] == _rebuilt_rows(
+            raw.sparkSession, out, tier, r0.written_days)
     total_raw = turns.count()
     for tier in ("1h", "1d"):
         t = read_tier(raw.sparkSession, f"{out}/tier_{tier}")

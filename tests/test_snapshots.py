@@ -12,6 +12,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from tsdat_spark.io.snapshots import SnapshotTable
 
@@ -351,6 +352,32 @@ def test_legacy_snapshot_format_still_reads(spark, tmp_path):
     # appends on top of a legacy snapshot keep working (new format forward)
     reread.append(_df(spark, 4, 6))
     assert reread.read(spark).count() == 6
+
+
+def test_snapshot_schema_recorded_and_pre_schema_json_still_reads(spark, tmp_path):
+    """Commits record the written schema, which reads use instead of
+    inferring it; rollback carries it. Snapshot JSON written before the
+    field existed has no schema and still reads, by inference, to the same
+    schema and rows."""
+    tbl = SnapshotTable(str(tmp_path / "tbl"))
+    df = _df(spark, 0, 4).withColumn("s", F.col("v").cast("string"))
+    s1 = tbl.append(df)
+    assert s1.schema == df.schema.jsonValue()
+    tbl.append(df)
+    assert tbl.rollback(s1.snapshot_id).schema == s1.schema
+    known = tbl.read(spark)
+    # drop the field, as a snapshot committed before it existed
+    for s in tbl.snapshots():
+        d = json.loads(tbl.fs.read_text(tbl._snapshot_path(s.snapshot_id)))
+        del d["schema"]
+        tbl.fs.write_text(tbl._snapshot_path(s.snapshot_id), json.dumps(d))
+    reread = SnapshotTable(str(tmp_path / "tbl"))
+    assert reread.snapshot().schema is None
+    inferred = reread.read(spark)
+    assert inferred.schema == known.schema
+    assert sorted(inferred.collect()) == sorted(known.collect())
+    # a commit on top of a pre-schema parent records its own schema
+    assert reread.append(df).schema == df.schema.jsonValue()
 
 
 def _legacyize(tbl, sid):

@@ -15,6 +15,11 @@ Protocol:
    row count — commutative, so partition layout cannot change it, and
    duplicate-row multiplicity affects it, which a bare XOR would cancel),
    and QC counters (sum of each ``qc_*`` column's nonzero flags).
+   ``run_ingest`` fingerprints the committed partitions: its write
+   observes which days it touched, and the manifests aggregate a
+   partition-pruned scan of just those days of the stored table, so they
+   describe what was actually stored and the standardize/QC plan runs once
+   (a custom sink that cannot be read back fingerprints the plan instead).
 2. ``write_manifests`` stores them as JSON sidecars under
    ``<table>/_manifests/<date>.json`` (an Iceberg deployment would put them
    in snapshot summary properties instead).

@@ -25,7 +25,10 @@ travel, expiry) as a minimal from-scratch layer:
   ONE full-state manifest, bounding a read to ≤ ``compact_every`` + 1
   small JSON gets regardless of history length (amortized commit cost
   stays O(files_added + total/compact_every));
-- row counts ride an ``Observation`` on the write job — no second scan.
+- row counts ride an ``Observation`` on the write job — no second scan;
+- the written schema is recorded on the snapshot, so reads skip parquet's
+  schema-inference job (snapshot JSON from before the field existed has
+  no schema and still infers).
 
 Commit protocol (single writer, documented like Iceberg without a
 catalog lock): (1) write data files into a fresh snapshot dir, (2) PUT
@@ -51,6 +54,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .fs import get_filesystem
+from .writers import schema_reader
 
 # Fold the manifest chain into one full-state manifest every N commits:
 # bounds reads to <= N+1 metadata gets and keeps amortized commit
@@ -70,6 +74,7 @@ class Snapshot:
     n_rows_total: int
     n_files_total: int
     summary: dict = field(default_factory=dict)
+    schema: dict | None = None  # StructType.jsonValue() of the data files
 
 
 class SnapshotTable:
@@ -158,7 +163,7 @@ class SnapshotTable:
         files = self.files(s)
         if not files:
             raise FileNotFoundError(f"{self.root}@{s.snapshot_id}: empty table")
-        return spark.read.parquet(*files)
+        return schema_reader(spark, s.schema).parquet(*files)
 
     # ------------------------------------------------------------ writes
     def _commit(self, snap: Snapshot) -> Snapshot:
@@ -226,7 +231,7 @@ class SnapshotTable:
             manifest_files=manifests, added_files=files,
             n_rows_added=n, n_rows_total=prev_rows + n,
             n_files_total=prev_nfiles + len(files),
-            summary=summary or {}))
+            summary=summary or {}, schema=df.schema.jsonValue()))
 
     def overwrite(self, df: DataFrame, timestamp: float | None = None,
                   summary: dict | None = None) -> Snapshot:
@@ -239,7 +244,8 @@ class SnapshotTable:
             timestamp=timestamp if timestamp is not None else time.time(),
             manifest_files=[self._write_manifest(sid, files)],
             added_files=files, n_rows_added=n, n_rows_total=n,
-            n_files_total=len(files), summary=summary or {}))
+            n_files_total=len(files), summary=summary or {},
+            schema=df.schema.jsonValue()))
 
     def rollback(self, snapshot_id: int, timestamp: float | None = None) -> Snapshot:
         """New snapshot that restores an older file list by REUSING the
@@ -262,7 +268,7 @@ class SnapshotTable:
             manifest_files=manifests, added_files=[],
             n_rows_added=0, n_rows_total=target.n_rows_total,
             n_files_total=target.n_files_total,
-            summary={"rolled_back_to": snapshot_id}))
+            summary={"rolled_back_to": snapshot_id}, schema=target.schema))
 
     # ------------------------------------------------------------ expiry
     def expire(self, keep_last: int = 1) -> dict:

@@ -12,25 +12,66 @@ tsdat's ``modified_since``). The sandbox image has no Iceberg jars, so the
 writer degrades to date-partitioned parquet with identical layout and an
 explicit manifest sidecar (``checkpoint.py``) standing in for the snapshot
 metadata. The code path is chosen at runtime behind an import/config probe.
+
+Iceberg table metadata also records the schema, so an Iceberg scan plans
+without touching a data file. The parquet fallback keeps the same property
+with a hidden ``<table>/_schema.json`` sidecar: :func:`write_tier` records
+the written schema there, and :func:`read_tier` hands it to
+``spark.read.schema(...)`` instead of launching parquet's one-task
+schema-inference job. The ``_`` prefix keeps Spark scans blind to it, like
+``_manifests/``. Tables written by something else have no sidecar and are
+read with inference.
 """
 
 from __future__ import annotations
 
+import json
+import posixpath
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .fs import get_filesystem
 
 PARTITION_COL = "p_date"
+SCHEMA_SIDECAR = "_schema.json"
+
+
+def _sidecar_fs(path: str):
+    """Filesystem for the schema sidecar, or None for a scheme with no
+    registered filesystem: Spark still reads and writes such a table, it
+    just infers the schema."""
+    try:
+        return get_filesystem(path)
+    except NotImplementedError:
+        return None
+
+
+def schema_reader(spark: SparkSession, schema: dict | None) -> DataFrameReader:
+    """``spark.read`` bound to a recorded schema (``StructType.jsonValue()``
+    form), or the plain inferring reader when none was recorded."""
+    reader = spark.read
+    return reader.schema(StructType.fromJson(schema)) if schema else reader
+
+
+#: application id -> whether its driver JVM has the Iceberg classes
+_ICEBERG_BY_APP: dict[str, bool] = {}
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        jvm = spark._jvm  # noqa: SLF001
-        jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
+    """Probed once per Spark application: a running JVM's classpath does
+    not change, and the failed class lookup costs ~40 ms per call."""
+    app = spark.sparkContext.applicationId
+    if app not in _ICEBERG_BY_APP:
+        try:
+            jvm = spark._jvm  # noqa: SLF001
+            jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
+            _ICEBERG_BY_APP[app] = True
+        except Exception:
+            _ICEBERG_BY_APP[app] = False
+    return _ICEBERG_BY_APP[app]
 
 
 def iceberg_table_writer(out: DataFrame, table: str) -> None:
@@ -71,6 +112,10 @@ def write_tier(
     if partition_overwrite:
         writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(path)
+    fs = _sidecar_fs(path)
+    if fs is not None:
+        fs.write_text(posixpath.join(path, SCHEMA_SIDECAR),
+                      json.dumps(out.schema.jsonValue()))
 
 
 class CSVDatasetWriter:
@@ -236,8 +281,13 @@ def read_tier(
     end: datetime | str | None = None,
 ) -> DataFrame:
     """Scan a tier table; the date predicate prunes partitions (tsdat's
-    fetch_data time-range file filtering, for free from Catalyst)."""
-    df = spark.read.parquet(path)
+    fetch_data time-range file filtering, for free from Catalyst). The
+    schema comes from the table's sidecar when :func:`write_tier` wrote
+    one (see module docstring)."""
+    fs = _sidecar_fs(path)
+    sidecar = posixpath.join(path, SCHEMA_SIDECAR)
+    schema = json.loads(fs.read_text(sidecar)) if fs and fs.exists(sidecar) else None
+    df = schema_reader(spark, schema).parquet(path)
     if start is not None:
         df = df.where(F.col(PARTITION_COL) >= F.to_date(F.lit(start)))
     if end is not None:

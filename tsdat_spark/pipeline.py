@@ -25,12 +25,12 @@ from dataclasses import dataclass, field
 from datetime import date, datetime
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .config import DatasetSpec
 from .io.checkpoint import completed_partitions, partition_manifests, write_manifests
-from .io.writers import PARTITION_COL, write_tier
+from .io.writers import PARTITION_COL, read_tier, write_tier
 from .qc.checkers import QCContext
 from .qc.manager import QualityManager, apply_qc
 from .rollup import reaggregate_tier, rollup_tier
@@ -74,7 +74,11 @@ def run_ingest(
 
     ``writer``: optional storage sink ``(df, table_path) -> None`` (e.g.
     :class:`tsdat_spark.io.writers.CSVDatasetWriter`); default is the
-    date-partitioned tier write. Lineage manifests are emitted either way.
+    date-partitioned tier write. Lineage manifests are emitted either way:
+    on the default path they fingerprint the committed partitions (the
+    write observes which days it touched, and only those partitions are
+    scanned back), so the standardize/QC plan runs once. A custom sink
+    cannot be read back generically, so its manifests fingerprint the plan.
 
     ``hook_plot``: side-effect-only observer invoked with the FINAL
     DataFrame after storage — the ``hook_plot_dataset`` slot of the
@@ -100,9 +104,19 @@ def run_ingest(
     if table_path:
         if writer is not None:
             writer(df, table_path)
+            manifests = partition_manifests(df, ts_col=spec.ts_col)
         else:
-            write_tier(df, table_path, ts_col=spec.ts_col)
-        manifests = partition_manifests(df, ts_col=spec.ts_col)
+            day = F.to_date(F.col(spec.ts_col))
+            touched = Observation()
+            write_tier(df.observe(touched, F.collect_set(day).alias("days"),
+                                  F.count_if(day.isNull()).alias("nulls")),
+                       table_path, ts_col=spec.ts_col)
+            got = touched.get
+            keep = F.col(PARTITION_COL).isin(got["days"])
+            if got["nulls"]:  # null-ts rows land in the null partition
+                keep = keep | F.col(PARTITION_COL).isNull()
+            stored = read_tier(df.sparkSession, table_path).where(keep)
+            manifests = partition_manifests(stored, ts_col=spec.ts_col, lineage_cols=df.columns)
         write_manifests(table_path, manifests)
     if hook_plot:
         hook_plot(df)
@@ -166,11 +180,17 @@ def run_rollup_job(
 
     base = tiers[0]
     base_path = f"{out_root}/tier_{base}"
+    # Per-tier row metrics ride an Observation on each tier's write job, so
+    # they count exactly the rows written this run at no extra scan; a tier
+    # with nothing to do gets no metric.
+    rows: dict[str, Observation] = {}
     base_days = sorted(m.partition for m in per_tier_todo[base])
     if base_days:
         filtered = turns.where(F.to_date(F.col(ts_col)).cast("string").isin(base_days))
         fine = rollup_tier(filtered, base, series_keys=series_keys, ts_col=ts_col)
-        write_tier(fine, base_path, ts_col="bin_start")
+        rows[base] = Observation()
+        write_tier(fine.observe(rows[base], F.count(F.lit(1)).alias("n")),
+                   base_path, ts_col="bin_start")
         write_manifests(base_path, per_tier_todo[base])
     result.written_days = base_days
 
@@ -180,25 +200,16 @@ def run_rollup_job(
         days = [date.fromisoformat(m.partition) for m in per_tier_todo[tier]]
         if days:
             # partition-pruned scan of the finer tier's written table
-            finer = spark.read.parquet(prev_path).where(F.col(PARTITION_COL).isin(days))
+            finer = read_tier(spark, prev_path).where(F.col(PARTITION_COL).isin(days))
             coarser = reaggregate_tier(finer, tier, series_keys=series_keys)
-            write_tier(coarser, path, ts_col="bin_start")
+            rows[tier] = Observation()
+            write_tier(coarser.observe(rows[tier], F.count(F.lit(1)).alias("n")),
+                       path, ts_col="bin_start")
             write_manifests(path, per_tier_todo[tier])
         prev_path = path
 
-    # Per-run metrics: count ONLY the partitions rebuilt this run (partition
-    # -pruned scans) — a mostly-skipped resume run must not pay full-table
-    # recounts of every tier, and a tier that had nothing to do may not even
-    # have a directory yet (crash-resume), so it gets no metric.
-    for tier in tiers:
-        days = [date.fromisoformat(m.partition) for m in per_tier_todo[tier]]
-        if not days:
-            continue
-        result.metrics[f"tier_{tier}_rows"] = (
-            spark.read.parquet(f"{out_root}/tier_{tier}")
-            .where(F.col(PARTITION_COL).isin(days))
-            .count()
-        )
+    for tier, obs in rows.items():
+        result.metrics[f"tier_{tier}_rows"] = obs.get["n"]
     return result
 
 

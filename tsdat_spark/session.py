@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: share of physical memory the default driver heap may take; the rest is
+#: left to off-heap buffers, Python workers and the OS
+DRIVER_MEM_FRACTION = 0.6
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap default: ~60% of physical memory in whole GiB (at least
+    1g), so the JVM spills instead of growing past RAM and getting killed.
+    ``TSDAT_SPARK_DRIVER_MEM`` overrides it in :func:`get_spark`."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(phys_bytes * DRIVER_MEM_FRACTION) >> 30)}g"
+
+
 def get_spark(
     app_name: str = "tsdat_spark",
     cores: int | None = None,
@@ -51,10 +65,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode: driver heap is the only executor memory — size it to
-        # the box (32 concurrent tasks × task working set + cached tiers);
-        # an undersized heap shows up as INVERSE scaling at high core
-        # counts (GC thrash grows with concurrent tasks)
-        .config("spark.driver.memory", os.environ.get("TSDAT_SPARK_DRIVER_MEM", "48g"))
+        # the box (concurrent tasks × task working set + cached tiers); an
+        # undersized heap shows up as INVERSE scaling at high core counts
+        # (GC thrash grows with concurrent tasks)
+        .config("spark.driver.memory",
+                os.environ.get("TSDAT_SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Arrow/pandas stages cost ~10x more CPU per byte than JVM scans, so
         # scan splits and post-shuffle partitions are sized for the Python

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io.writers import read_tier, schema_reader
 from .rollup import reaggregate_tier, rollup_tier
 from .rollup.tiers import TIER_SECONDS
 
@@ -78,7 +79,7 @@ def compact_tier(
     at its OWN grain (merge is associative; same operator as the tier
     cascade). Returns the compacted frame; callers decide whether to
     rewrite the table or just read through it."""
-    df = spark.read.parquet(tier_path)
+    df = read_tier(spark, tier_path)
     return reaggregate_tier(df, tier, series_keys=list(series_keys))
 
 
@@ -649,9 +650,9 @@ def history_dedup_sink(
             # Rebuild the increment from the files the commit just wrote —
             # O(batch) read-back — instead of re-executing the dedup plan
             # (probe + anti-join + window) a second time.
-            added = table.snapshot().added_files
-            if added:
-                committed = spark.read.parquet(*added)
+            snap = table.snapshot()
+            if snap.added_files:
+                committed = schema_reader(spark, snap.schema).parquet(*snap.added_files)
                 state["bloom"] |= np.frombuffer(
                     build_bloom(committed, _key(committed),
                                 n_bits=n_bits, n_hashes=n_hashes),
