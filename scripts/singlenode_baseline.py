@@ -121,13 +121,13 @@ def rollup_engine_kernel(pdf: pd.DataFrame, outdir: str) -> dict:
     reference_style variants above measure a LIGHTER job (no digests, no
     persistence); this one is the apples-to-apples single-node ceiling the
     "matches-or-beats single-node throughput" claim compares against.
-    Reuses the engine's own kernels (``_group_slices``,
+    Reuses the engine's own kernels (``group_slices``,
     ``fast_bytes_from_sorted``, ``fast_merge_bytes``) single-threaded."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from tsdat_spark.rollup.tdigest import fast_bytes_from_sorted, fast_merge_bytes
-    from tsdat_spark.rollup.tiers import _group_slices
+    from tsdat_spark.grouping import group_slices
 
     os.makedirs(outdir, exist_ok=True)
     keys = ["conv_id", "role", "bin_us"]
@@ -138,7 +138,7 @@ def rollup_engine_kernel(pdf: pd.DataFrame, outdir: str) -> dict:
     t0 = time.time()
     t = pdf[["conv_id", "role", "ts_us", "token_len", "latency_us"]].copy()
     t["bin_us"] = (t["ts_us"] // GRAIN_US["1m"]) * GRAIN_US["1m"]
-    t, starts, ends = _group_slices(t, keys)
+    t, starts, ends = group_slices(t, keys)
     tok = t["token_len"].to_numpy(np.float64, na_value=np.nan)
     lat = t["latency_us"].to_numpy(np.float64, na_value=np.nan)
     lat_ok = ~np.isnan(lat)
@@ -160,7 +160,7 @@ def rollup_engine_kernel(pdf: pd.DataFrame, outdir: str) -> dict:
         t0 = time.time()
         fine = pq.read_table(prev_path).to_pandas()
         fine["bin_us"] = (fine["bin_us"] // GRAIN_US[grain]) * GRAIN_US[grain]
-        fine, starts, ends = _group_slices(fine, keys)
+        fine, starts, ends = group_slices(fine, keys)
         out = fine.iloc[starts][keys].reset_index(drop=True)
         for c in ("n_turns", "token_len_sum", "n_latency"):
             out[c] = np.add.reduceat(fine[c].to_numpy(np.float64), starts).astype("int64")

@@ -49,6 +49,17 @@ def test_lz4_known_vector():
     assert lz4_decompress(src, 14) == b"abcdeabcdeabc!"
 
 
+def test_lz4_wrong_dest_size_raises():
+    """blosc and bitshuffle frames carry each block's decoded size; a
+    block that decodes to any other length is corrupt and must raise."""
+    data = b"abc" * 1016 + b"xy"
+    comp = lz4_compress(data)
+    assert lz4_decompress(comp, len(data)) == data
+    for n in (len(data) - 1, len(data) + 1):
+        with pytest.raises(ValueError, match="LZ4 block decoded"):
+            lz4_decompress(comp, n)
+
+
 @pytest.mark.parametrize("typesize,n", [(8, 64), (8, 2048), (4, 1000), (1, 300), (76, 12)])
 def test_blosc_roundtrip_auto(typesize, n):
     """auto mode picks memcpy / single-stream / split per the c-blosc

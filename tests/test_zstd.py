@@ -1,11 +1,11 @@
-"""From-spec RFC 8878 zstd decoder (compress/zstd.py) — golden-checked
-against pyarrow's bundled libzstd (the canonical implementation), which
-this image ships even though no standalone zstd binding exists.
+"""zstd decode (compress/zstd.py, a wrapper over pyarrow's bundled
+libzstd) — frames written by libzstd at several levels decode exactly,
+and the wrapper keeps its error contract.
 
-Coverage map: raw/RLE/compressed blocks, single- and 4-stream Huffman
-literals, direct AND FSE-compressed Huffman weights, predefined/RLE/
-FSE/repeat sequence tables, repeated offsets, multi-block frames,
-skippable frames, and the dictionary boundary."""
+Coverage map: frame shapes libzstd emits (raw/RLE/compressed blocks,
+multi-block frames), frames without a Frame_Content_Size, concatenated
+and skippable frames, bad magic, truncation, the dictionary boundary,
+and the zarr v2/v3 and HDF5 filter 32015 read and write paths."""
 
 import numpy as np
 import pytest
@@ -86,6 +86,28 @@ def test_truncated_frame_content_size_mismatch():
     # corruption = truncate the last block payload byte
     with pytest.raises((ValueError, IndexError)):
         zstd_decompress(bytes(buf[:-1]))
+
+
+def test_frame_without_content_size_decodes():
+    """Streaming writers omit Frame_Content_Size (descriptor byte 0x00);
+    one-shot ``pyarrow.decompress`` cannot size such a frame, the
+    streaming decoder can."""
+    import pyarrow as pa
+
+    data = b"streamed chunk " * 3000
+    sink = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(sink, "zstd") as out:
+        out.write(data)
+    frame = sink.getvalue().to_pybytes()
+    assert frame[4] == 0x00
+    assert zstd_decompress(frame) == data
+
+
+def test_truncated_frame_raises_value_error():
+    frame = _c(b"truncate me " * 500)
+    for cut in (1, 3, len(frame) // 2):
+        with pytest.raises(ValueError, match="zstd"):
+            zstd_decompress(frame[:-cut])
 
 
 def test_zarr_v2_zstd_store_reads(tmp_path):
@@ -171,14 +193,14 @@ def test_dictionary_frame_boundary():
         zstd_decompress(frame + bytes([0x01, 0x00, 0x00]))
 
 
-# -- store-mode encoder (round 5) -------------------------------------------
+# -- encoder ----------------------------------------------------------------
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_store_mode_encoder_accepted_by_libzstd(name):
-    """zstd_compress emits raw/RLE-block frames; the canonical libzstd
-    decoder (and our own) must accept every shape, including the empty
-    frame, multi-block >64 KiB payloads, and RLE runs."""
+    """Frames zstd_compress writes decode both through zstd_decompress
+    and through one-shot libzstd with the exact size, including the
+    empty frame, multi-block payloads, and RLE runs."""
     from tsdat_spark.compress.zstd import zstd_compress
 
     data = CASES[name]
@@ -192,7 +214,7 @@ def test_store_mode_rle_actually_shrinks():
 
     data = b"\x07" * 250_000
     frame = zstd_compress(data)
-    assert len(frame) < 100  # 4 RLE blocks + headers, not 250 KB
+    assert len(frame) < 100  # RLE-coded, not 250 KB
     assert zstd_decompress(frame) == data
 
 

@@ -4,8 +4,9 @@ Why: bitshuffle is the remaining real-world filter on the scientific-store
 read path — c-blosc chunks with the bit-shuffle flag (``shuffle: 2`` in
 zarr v2 metadata, common for compressible numeric data) and HDF5 files
 using the registered bitshuffle plugin (filter id 32008, usually with its
-built-in LZ4 or zstd framing). This image has neither c-blosc nor the
-bitshuffle library, so the layout is implemented from its public
+built-in LZ4 or zstd framing; the zstd blocks decode through
+``compress/zstd``). This image has neither c-blosc nor the bitshuffle
+library, so the layout is implemented from its public
 definition (bitshuffle README / bitshuffle_core.c semantics; Masui et
 al. 2015, "A compression scheme for radio data in high performance
 computing"):
@@ -154,7 +155,7 @@ def bshuf_compress(
     """Frame ``data`` as the bitshuffle HDF5 filter's compressed stream."""
     if compressor != _COMP_LZ4:
         raise NotImplementedError(
-            "bitshuffle framing encode supports LZ4 only (no zstd encoder)"
+            "bitshuffle framing encode supports LZ4 only"
         )
     from .lz4block import lz4_compress
 

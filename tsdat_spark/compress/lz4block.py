@@ -9,6 +9,13 @@ valid stream (greedy hash-chain matching would also be valid — but blosc
 re-compresses nothing on read, and writes go through ``store_mode='raw'``
 by default, so the literal-heavy encoder is only a test/round-trip aid).
 
+Why not pyarrow's ``lz4_raw`` codec: ``pyarrow.decompress(block,
+decompressed_size=n, codec="lz4_raw")`` does not check that the block
+decodes to exactly ``n`` bytes. A block that decodes to 3,050 bytes,
+asked for 3,051, returns 3,051 bytes without an error, the last one from
+an uninitialised buffer. blosc and bitshuffle frames rely on the exact
+size check that :func:`lz4_decompress` makes to detect corrupt blocks.
+
 A block is a sequence of:
   token(1B: hi-nibble literal_len, lo-nibble match_len-4; 15 ⇒ continue
   with 255-bytes), literals, 2B little-endian match offset (≥1), match

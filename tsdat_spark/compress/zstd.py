@@ -1,621 +1,34 @@
-"""Pure-Python Zstandard DECODER — RFC 8878 subset (no dictionaries).
+"""Zstandard (RFC 8878) through the libzstd that pyarrow bundles.
 
-Why: zarr-python increasingly defaults to zstd, and netcdf-c/HDF5 deploys
-ship zstd-filtered chunks; this image has no zstd binding, and the engine's
-policy is from-spec codecs behind documented boundaries (see
-``compress/bloscc.py``). This module implements the decode side of
-RFC 8878 ("Zstandard Compression and the 'application/zstd' Media Type"):
-
-- frames: magic, frame-header descriptor, window/single-segment, frame
-  content size, concatenated + skippable frames; dictionaries REJECTED
-  (``Dictionary_ID`` != 0 raises — the documented subset boundary);
-  content checksums VERIFIED (from-spec XXH64, ``compress/xxhash64``).
-- blocks: Raw / RLE / Compressed.
-- literals: Raw / RLE / Huffman-compressed (single and 4-stream) /
-  Treeless (table reuse across blocks).
-- Huffman: direct 4-bit weights AND FSE-compressed weights (two
-  interleaved states), canonical prefix-code table build per spec.
-- sequences: FSE with all four modes (Predefined / RLE / FSE_Compressed /
-  Repeat), the RFC's predefined LL/ML/OF distributions, repeated-offset
-  history incl. the literals_length==0 shift, overlapping match copies.
-
-Encode side lives in :mod:`.zstd_enc` (LZ77 + Huffman literals +
-Predefined-FSE sequences; :func:`zstd_compress` delegates, and
-:func:`zstd_compress_store` keeps the raw/RLE store-mode posture).
-Attempting to read a dictionary frame raises a named error.
-
-Performance shape: decoding runs inside Spark tasks (one chunk per task),
-so the per-byte Python cost is distributed; the bit readers are O(1) per
-read (windowed int.from_bytes, no big-int shifting).
+Decode streams, so frames without a Frame_Content_Size (what streaming
+writers such as ``zstd`` on stdin emit) and concatenated or skippable
+frames all read. libzstd's ``OSError`` maps to the module's error
+contract: ``NotImplementedError`` for dictionary frames, ``ValueError``
+(named "zstd: ...") for everything else.
 """
 
 from __future__ import annotations
 
-import struct
+import pyarrow as pa
 
-_MAGIC = 0xFD2FB528
-_SKIPPABLE_LO, _SKIPPABLE_HI = 0x184D2A50, 0x184D2A5F
-
-
-class _BackBits:
-    """MSB-first backward bitstream (FSE/Huffman): the LAST byte carries a
-    1-bit sentinel at its highest set bit; data bits run downward from it.
-    Reads past the start zero-pad and drive ``pos`` negative (the spec's
-    stream-exhaustion signal for interleaved-state loops)."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        if not data or data[-1] == 0:
-            raise ValueError("zstd: corrupt backward bitstream (no sentinel)")
-        self.data = data
-        self.pos = (len(data) - 1) * 8 + data[-1].bit_length() - 1
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        self.pos -= n
-        p = self.pos
-        if p >= 0:
-            b0 = p >> 3
-            nbytes = (n + (p & 7) + 7) >> 3
-            window = int.from_bytes(self.data[b0 : b0 + nbytes], "little")
-            return (window >> (p & 7)) & ((1 << n) - 1)
-        avail = n + p
-        if avail <= 0:
-            return 0
-        window = int.from_bytes(self.data[: (avail + 7) >> 3], "little")
-        return (window & ((1 << avail) - 1)) << (-p)
-
-    def peek(self, n: int) -> int:
-        pos, val = self.pos, self.read(n)
-        self.pos = pos
-        return val
+_CODEC = pa.Codec("zstd", compression_level=3)  # libzstd's default level
 
 
-class _FwdBits:
-    """LSB-first forward bitstream (FSE table descriptions only)."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        self.pos = p + n
-        b0 = p >> 3
-        nbytes = (n + (p & 7) + 7) >> 3
-        window = int.from_bytes(self.data[b0 : b0 + nbytes], "little")
-        return (window >> (p & 7)) & ((1 << n) - 1)
-
-    def peek(self, n: int) -> int:
-        pos, val = self.pos, self.read(n)
-        self.pos = pos
-        return val
-
-    def bytes_consumed(self) -> int:
-        return (self.pos + 7) >> 3
-
-
-# ---------------------------------------------------------------- FSE
-
-
-def _fse_read_ncount(bits: _FwdBits, max_symbol: int) -> tuple[list[int], int]:
-    """Parse a normalized-count table description (RFC 8878 §4.1.1):
-    variable-bit counts, probability -1 ("less than one"), and 2-bit
-    zero-run repeat flags. Returns (counts per symbol, accuracy_log)."""
-    accuracy_log = bits.read(4) + 5
-    if accuracy_log > 9:
-        raise ValueError(f"zstd: FSE accuracy log {accuracy_log} > 9")
-    size = 1 << accuracy_log
-    remaining = size + 1
-    threshold = size
-    nb_bits = accuracy_log + 1
-    counts = [0] * (max_symbol + 1)
-    sym = 0
-    previous0 = False
-    while remaining > 1:
-        if sym > max_symbol:
-            raise ValueError("zstd: FSE description overruns symbol range")
-        if previous0:
-            while True:
-                rep = bits.read(2)
-                sym += rep
-                if rep < 3:
-                    break
-            previous0 = False
-            if sym > max_symbol:
-                raise ValueError("zstd: FSE zero-run overruns symbol range")
-            continue_after_zeros = True
-        # variable-size count: small values use nb_bits-1 bits
-        maxv = (2 * threshold - 1) - remaining
-        val = bits.peek(nb_bits)
-        if (val & (threshold - 1)) < maxv:
-            val &= threshold - 1
-            bits.pos += nb_bits - 1
-        else:
-            val &= 2 * threshold - 1
-            if val >= threshold:
-                val -= maxv
-            bits.pos += nb_bits
-        prob = val - 1  # -1 .. remaining
-        remaining -= -prob if prob < 0 else prob
-        counts[sym] = prob
-        sym += 1
-        previous0 = prob == 0
-        while remaining < threshold:
-            nb_bits -= 1
-            threshold >>= 1
-    if remaining != 1:
-        raise ValueError("zstd: FSE normalized counts do not sum to table size")
-    return counts, accuracy_log
-
-
-def _fse_build_dtable(counts: list[int], accuracy_log: int):
-    """Decode table per FSE_buildDTable: -1-probability symbols occupy the
-    TOP states (nbBits = accuracy_log, baseline 0); positive-probability
-    symbols spread with step (size>>1)+(size>>3)+3 over the remaining
-    states. Returns parallel lists (symbol, nb_bits, baseline)."""
-    size = 1 << accuracy_log
-    symbols = [0] * size
-    high = size - 1
-    for s, p in enumerate(counts):
-        if p == -1:
-            symbols[high] = s
-            high -= 1
-    step = (size >> 1) + (size >> 3) + 3
-    mask = size - 1
-    pos = 0
-    for s, p in enumerate(counts):
-        if p > 0:
-            for _ in range(p):
-                symbols[pos] = s
-                pos = (pos + step) & mask
-                while pos > high:
-                    pos = (pos + step) & mask
-    if pos != 0:
-        raise ValueError("zstd: FSE spread did not return to zero")
-    nxt = [p if p > 0 else 1 for p in counts]
-    nb_bits = [0] * size
-    baseline = [0] * size
-    for i in range(high + 1, size):  # the -1 symbols at the top
-        nb_bits[i] = accuracy_log
-        baseline[i] = 0
-        nxt[symbols[i]] = 1  # consumed their single state
-    for i in range(size):
-        if i > high:
-            continue
-        s = symbols[i]
-        ns = nxt[s]
-        nxt[s] += 1
-        nb = accuracy_log - (ns.bit_length() - 1)
-        nb_bits[i] = nb
-        baseline[i] = (ns << nb) - size
-    return symbols, nb_bits, baseline
-
-
-def _fse_rle_table(symbol: int):
-    return [symbol], [0], [0]
-
-
-# ------------------------------------------------------------- Huffman
-
-
-def _huf_table_from_weights(weights: list[int]):
-    """Canonical Huffman decode table (RFC 8878 §4.2.1): the LAST weight is
-    implicit (completes the sum to a power of two); bits(sym) =
-    table_log + 1 - weight; symbols fill 2^(weight-1) consecutive cells in
-    order of increasing weight then symbol id."""
-    total = sum((1 << (w - 1)) for w in weights if w > 0)
-    if total == 0:
-        raise ValueError("zstd: huffman weights all zero")
-    table_log = total.bit_length() if total & (total - 1) else total.bit_length() - 1
-    if (1 << table_log) < total + 1:
-        table_log += 1
-    left = (1 << table_log) - total
-    if left & (left - 1):
-        raise ValueError("zstd: huffman weights do not complete a power of two")
-    last_w = left.bit_length()  # log2(left) + 1
-    weights = weights + [last_w]
-    if table_log > 11:
-        raise ValueError(f"zstd: huffman table log {table_log} > 11")
-    size = 1 << table_log
-    sym_of = [0] * size
-    nbits_of = [0] * size
-    pos = 0
-    for w in range(1, table_log + 1):
-        for s, ws in enumerate(weights):
-            if ws == w:
-                span = 1 << (w - 1)
-                nb = table_log + 1 - w
-                for _ in range(span):
-                    sym_of[pos] = s
-                    nbits_of[pos] = nb
-                    pos += 1
-    if pos != size:
-        raise ValueError("zstd: huffman table underfilled")
-    return sym_of, nbits_of, table_log
-
-
-def _huf_read_weights(src: bytes) -> tuple[list[int], int]:
-    """Huffman tree description → (weights, bytes consumed)."""
-    hb = src[0]
-    if hb >= 128:  # direct: 4-bit weights
-        n = hb - 127
-        nbytes = (n + 1) // 2
-        raw = src[1 : 1 + nbytes]
-        weights = []
-        for i in range(n):
-            b = raw[i >> 1]
-            weights.append((b >> 4) if i % 2 == 0 else (b & 0xF))
-        return weights, 1 + nbytes
-    # FSE-compressed weights: two interleaved states, accuracy log <= 6
-    comp = src[1 : 1 + hb]
-    fwd = _FwdBits(comp)
-    counts, al = _fse_read_ncount(fwd, 255)
-    if al > 6:
-        raise ValueError("zstd: huffman-weight FSE accuracy log > 6")
-    syms, nbs, bases = _fse_build_dtable(counts, al)
-    stream = comp[fwd.bytes_consumed():]
-    bb = _BackBits(stream)
-    s1 = bb.read(al)
-    s2 = bb.read(al)
-    weights: list[int] = []
-    while len(weights) < 256:
-        # emit, UPDATE, then check exhaustion — when a state update reads
-        # past the stream start, the OTHER state flushes its symbol and
-        # decoding stops (RFC 8878 interleaved two-state FSE). The 256
-        # bound turns a pathological zero-bit state cycle (a weight with
-        # probability > tableSize/2 pinned at exhaustion) into the
-        # too-many-weights error below instead of a hang.
-        weights.append(syms[s1])
-        s1 = bases[s1] + bb.read(nbs[s1])
-        if bb.pos < 0:
-            weights.append(syms[s2])
-            break
-        weights.append(syms[s2])
-        s2 = bases[s2] + bb.read(nbs[s2])
-        if bb.pos < 0:
-            weights.append(syms[s1])
-            break
-    if len(weights) > 255:
-        raise ValueError("zstd: too many huffman weights")
-    return weights, 1 + hb
-
-
-def _huf_decode_stream(data: bytes, table, n_out: int) -> bytearray:
-    sym_of, nbits_of, table_log = table
-    bb = _BackBits(data)
-    out = bytearray(n_out)
-    for i in range(n_out):
-        idx = bb.peek(table_log)
-        out[i] = sym_of[idx]
-        bb.pos -= nbits_of[idx]
-    return out
-
-
-# ----------------------------------------------------- sequence tables
-
-# code → (baseline, nb extra bits), RFC 8878 §3.1.1.3.2.1.1
-_LL_BASE = (
-    [(i, 0) for i in range(16)]
-    + [(16, 1), (18, 1), (20, 1), (22, 1), (24, 2), (28, 2), (32, 3), (40, 3),
-       (48, 4), (64, 6), (128, 7), (256, 8), (512, 9), (1024, 10), (2048, 11),
-       (4096, 12), (8192, 13), (16384, 14), (32768, 15), (65536, 16)]
-)
-_ML_BASE = (
-    [(i + 3, 0) for i in range(32)]
-    + [(35, 1), (37, 1), (39, 1), (41, 1), (43, 2), (47, 2), (51, 3), (59, 3),
-       (67, 4), (83, 4), (99, 5), (131, 7), (259, 8), (515, 9), (1027, 10),
-       (2051, 11), (4099, 12), (8195, 13), (16387, 14), (32771, 15),
-       (65539, 16)]
-)
-
-# predefined FSE distributions, RFC 8878 §3.1.1.3.2.2
-_LL_DEFAULT = ([4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1, 2, 2, 2, 2, 2,
-                2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1, -1, -1, -1, -1], 6)
-_ML_DEFAULT = ([1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                1, 1, 1, 1, -1, -1, -1, -1, -1, -1, -1], 6)
-_OF_DEFAULT = ([1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                1, 1, 1, -1, -1, -1, -1, -1], 5)
-
-_MAX_LL_CODE, _MAX_ML_CODE, _MAX_OF_CODE = 35, 52, 31
-
-
-def _seq_table(mode: int, src: bytes, off: int, default, max_code: int,
-               prev, kind: str):
-    """One of the four sequence-table modes → ((syms, nbs, bases, log),
-    new offset). ``prev`` is the table carried across blocks for Repeat."""
-    if mode == 0:
-        counts, al = default
-        syms, nbs, bases = _fse_build_dtable(counts, al)
-        return (syms, nbs, bases, al), off
-    if mode == 1:
-        code = src[off]
-        if code > max_code:
-            raise ValueError(f"zstd: RLE {kind} code {code} out of range")
-        syms, nbs, bases = _fse_rle_table(code)
-        return (syms, nbs, bases, 0), off + 1
-    if mode == 2:
-        fwd = _FwdBits(src[off:])
-        counts, al = _fse_read_ncount(fwd, max_code)
-        syms, nbs, bases = _fse_build_dtable(counts, al)
-        return (syms, nbs, bases, al), off + fwd.bytes_consumed()
-    if prev is None:
-        raise ValueError(f"zstd: Repeat {kind} table with no previous table")
-    return prev, off
-
-
-# ------------------------------------------------------------- frames
-
-
-class _FrameState:
-    """Tables that persist across blocks within one frame."""
-
-    __slots__ = ("huf", "ll", "ml", "of", "rep")
-
-    def __init__(self):
-        self.huf = None
-        self.ll = self.ml = self.of = None
-        self.rep = [1, 4, 8]
-
-
-def _decode_literals(block: bytes, st: _FrameState) -> tuple[bytes, int]:
-    """Literals section → (regenerated literals, bytes consumed)."""
-    b0 = block[0]
-    ltype = b0 & 3
-    sf = (b0 >> 2) & 3
-    if ltype in (0, 1):  # Raw / RLE
-        if sf in (0, 2):
-            rs, hdr = b0 >> 3, 1
-        elif sf == 1:
-            rs, hdr = (b0 >> 4) | (block[1] << 4), 2
-        else:
-            rs, hdr = (b0 >> 4) | (block[1] << 4) | (block[2] << 12), 3
-        if ltype == 0:
-            return bytes(block[hdr : hdr + rs]), hdr + rs
-        return bytes([block[hdr]]) * rs, hdr + 1
-    # Compressed / Treeless
-    h = int.from_bytes(block[:5], "little")
-    if sf == 0:
-        rs, cs, hdr, streams = (h >> 4) & 0x3FF, (h >> 14) & 0x3FF, 3, 1
-    elif sf == 1:
-        rs, cs, hdr, streams = (h >> 4) & 0x3FF, (h >> 14) & 0x3FF, 3, 4
-    elif sf == 2:
-        rs, cs, hdr, streams = (h >> 4) & 0x3FFF, (h >> 18) & 0x3FFF, 4, 4
-    else:
-        rs, cs, hdr, streams = (h >> 4) & 0x3FFFF, (h >> 22) & 0x3FFFF, 5, 4
-    body = block[hdr : hdr + cs]
-    if ltype == 2:  # new table
-        weights, consumed = _huf_read_weights(body)
-        st.huf = _huf_table_from_weights(weights)
-        body = body[consumed:]
-    elif st.huf is None:
-        raise ValueError("zstd: treeless literals with no previous table")
-    if streams == 1:
-        return bytes(_huf_decode_stream(body, st.huf, rs)), hdr + cs
-    s1, s2, s3 = struct.unpack_from("<HHH", body, 0)
-    body = body[6:]
-    share = (rs + 3) // 4
-    sizes = [s1, s2, s3, len(body) - s1 - s2 - s3]
-    outs = []
-    offset = 0
-    remaining = rs
-    for k in range(4):
-        n = share if k < 3 else remaining
-        outs.append(_huf_decode_stream(body[offset : offset + sizes[k]], st.huf, n))
-        offset += sizes[k]
-        remaining -= n
-    return bytes(b"".join(outs)), hdr + cs
-
-
-def _decode_block(block: bytes, out: bytearray, st: _FrameState) -> None:
-    literals, off = _decode_literals(block, st)
-    # sequence count
-    b = block[off]
-    if b == 0:
-        nseq, off = 0, off + 1
-    elif b < 128:
-        nseq, off = b, off + 1
-    elif b < 255:
-        nseq, off = ((b - 128) << 8) | block[off + 1], off + 2
-    else:
-        # longNbSeqs = byte1 + (byte2<<8) + 0x7F00 — ADDITION, not OR: an
-        # OR corrupts counts >= 0x8000 (reachable: 128 KiB / 3 B > 0x7FFF)
-        nseq, off = (block[off + 1] | (block[off + 2] << 8)) + 0x7F00, off + 3
-    if nseq == 0:
-        out += literals
-        return
-    modes = block[off]
-    off += 1
-    if modes & 3:
-        raise ValueError("zstd: reserved sequence-mode bits set")
-    st.ll, off = _seq_table((modes >> 6) & 3, block, off, _LL_DEFAULT,
-                            _MAX_LL_CODE, st.ll, "literal-length")
-    st.of, off = _seq_table((modes >> 4) & 3, block, off, _OF_DEFAULT,
-                            _MAX_OF_CODE, st.of, "offset")
-    st.ml, off = _seq_table((modes >> 2) & 3, block, off, _ML_DEFAULT,
-                            _MAX_ML_CODE, st.ml, "match-length")
-
-    ll_syms, ll_nbs, ll_bases, ll_log = st.ll
-    of_syms, of_nbs, of_bases, of_log = st.of
-    ml_syms, ml_nbs, ml_bases, ml_log = st.ml
-    bb = _BackBits(block[off:])
-    ll_state = bb.read(ll_log)
-    of_state = bb.read(of_log)
-    ml_state = bb.read(ml_log)
-    lit_pos = 0
-    rep = st.rep
-    for i in range(nseq):
-        of_code = of_syms[of_state]
-        offset_val = (1 << of_code) + bb.read(of_code)
-        ml_base, ml_extra = _ML_BASE[ml_syms[ml_state]]
-        match_len = ml_base + bb.read(ml_extra)
-        ll_base, ll_extra = _LL_BASE[ll_syms[ll_state]]
-        lit_len = ll_base + bb.read(ll_extra)
-        # repeated-offset resolution (RFC 8878 §3.1.1.5)
-        if offset_val > 3:
-            offset = offset_val - 3
-            rep[2] = rep[1]
-            rep[1] = rep[0]
-            rep[0] = offset
-        else:
-            idx = offset_val - 1 + (1 if lit_len == 0 else 0)
-            if idx == 0:
-                offset = rep[0]
-            elif idx == 3:
-                offset = rep[0] - 1
-                if offset == 0:
-                    raise ValueError("zstd: repeated offset underflow")
-                rep[2] = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-            else:
-                offset = rep[idx]
-                if idx == 2:
-                    rep[2] = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-        if i + 1 < nseq:  # state updates: LL, ML, OF order
-            ll_state = ll_bases[ll_state] + bb.read(ll_nbs[ll_state])
-            ml_state = ml_bases[ml_state] + bb.read(ml_nbs[ml_state])
-            of_state = of_bases[of_state] + bb.read(of_nbs[of_state])
-        out += literals[lit_pos : lit_pos + lit_len]
-        lit_pos += lit_len
-        if offset > len(out):
-            raise ValueError("zstd: match offset beyond window")
-        start = len(out) - offset
-        if offset >= match_len:
-            out += out[start : start + match_len]
-        else:  # overlapping copy
-            for j in range(match_len):
-                out.append(out[start + j])
-    out += literals[lit_pos:]
-
-
-def zstd_compress(data: bytes, checksum: bool = False) -> bytes:
-    """Encode one RFC 8878 frame. Entropy-coded (LZ77 + Huffman literals +
-    Predefined-FSE sequences, :mod:`.zstd_enc`) — zstd-selected writes
-    actually compress; per block the cheapest of Raw / RLE / Compressed
-    wins, so output never exceeds store mode (+4 bytes with
-    ``checksum=True``: the XXH64-low-32 Content_Checksum)."""
-    from .zstd_enc import compress
-
-    return compress(data, checksum=checksum)
-
-
-def zstd_compress_store(data: bytes) -> bytes:
-    """Store-mode encoder: one valid RFC 8878 frame of raw/RLE blocks —
-    no entropy coding, so any zstd decoder (including this module's)
-    reads it. Kept as the guaranteed-linear-cost fallback posture (the
-    same as blosc ``store_mode='raw'``); uniform runs still shrink via
-    RLE blocks."""
-    n = len(data)
-    # single-segment frame header with the smallest FCS field that fits
-    if n <= 255:
-        head = bytes([0x20, n])  # FCS flag 0 + single-segment: 1-byte FCS
-    elif n - 256 <= 0xFFFF:
-        head = bytes([0x60]) + struct.pack("<H", n - 256)
-    elif n <= 0xFFFFFFFF:
-        head = bytes([0xA0]) + struct.pack("<I", n)
-    else:
-        head = bytes([0xE0]) + struct.pack("<Q", n)
-    out = bytearray(struct.pack("<I", _MAGIC) + head)
-    block_max = 1 << 16
-    pos = 0
-    while True:
-        block = data[pos : pos + block_max]
-        pos += len(block)
-        last = 1 if pos >= n else 0
-        if len(block) > 1 and block == block[:1] * len(block):
-            out += int((len(block) << 3) | (1 << 1) | last).to_bytes(3, "little")
-            out += block[:1]  # RLE block: one byte, repeated size times
-        else:
-            out += int((len(block) << 3) | last).to_bytes(3, "little")
-            out += block
-        if last:
-            return bytes(out)
+def zstd_compress(data: bytes) -> bytes:
+    """Encode ``data`` as one zstd frame."""
+    return _CODEC.compress(data, asbytes=True)
 
 
 def zstd_decompress(data: bytes) -> bytes:
-    """Decode one or more concatenated zstd frames (skippable frames are
-    skipped). Dictionary frames raise — the documented subset boundary."""
-    out = bytearray()
-    pos = 0
-    n = len(data)
-    while pos < n:
-        magic = int.from_bytes(data[pos : pos + 4], "little")
-        pos += 4
-        if _SKIPPABLE_LO <= magic <= _SKIPPABLE_HI:
-            size = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4 + size
-            continue
-        if magic != _MAGIC:
-            raise ValueError(f"zstd: bad magic {magic:#010x}")
-        fhd = data[pos]
-        pos += 1
-        if fhd & 0x08:
-            raise ValueError("zstd: reserved frame-header bit set")
-        single_segment = bool(fhd & 0x20)
-        checksum = bool(fhd & 0x04)
-        did_size = (0, 1, 2, 4)[fhd & 3]
-        if not single_segment:
-            pos += 1  # window descriptor (whole history kept; value unused)
-        if did_size:
-            if int.from_bytes(data[pos : pos + did_size], "little") != 0:
-                raise NotImplementedError(
-                    "zstd dictionaries are not supported (documented boundary)"
-                )
-            pos += did_size
-        fcs_flag = fhd >> 6
-        fcs = None
-        if fcs_flag == 0:
-            if single_segment:
-                fcs = data[pos]
-                pos += 1
-        else:
-            nbytes = (0, 2, 4, 8)[fcs_flag]
-            fcs = int.from_bytes(data[pos : pos + nbytes], "little")
-            if fcs_flag == 1:
-                fcs += 256
-            pos += nbytes
-        st = _FrameState()
-        frame_start = len(out)
-        while True:
-            bh = int.from_bytes(data[pos : pos + 3], "little")
-            pos += 3
-            last = bh & 1
-            btype = (bh >> 1) & 3
-            bsize = bh >> 3
-            if btype == 0:
-                out += data[pos : pos + bsize]
-                pos += bsize
-            elif btype == 1:
-                out += data[pos : pos + 1] * bsize
-                pos += 1
-            elif btype == 2:
-                _decode_block(data[pos : pos + bsize], out, st)
-                pos += bsize
-            else:
-                raise ValueError("zstd: reserved block type")
-            if last:
-                break
-        if checksum:
-            from .xxhash64 import xxh64
-
-            stored = int.from_bytes(data[pos : pos + 4], "little")
-            got = xxh64(bytes(out[frame_start:])) & 0xFFFFFFFF
-            if stored != got:
-                raise ValueError(
-                    f"zstd: content checksum mismatch "
-                    f"(stored {stored:#010x}, computed {got:#010x})")
-            pos += 4
-        if fcs is not None and len(out) - frame_start != fcs:
-            raise ValueError(
-                f"zstd: frame decoded {len(out) - frame_start} bytes, "
-                f"header declared {fcs}"
-            )
-    return bytes(out)
+    """Decode one or more concatenated zstd frames."""
+    try:
+        with pa.CompressedInputStream(pa.py_buffer(data), "zstd") as src:
+            return src.read()
+    except OSError as e:
+        msg = str(e)
+        if "dictionary" in msg.lower():
+            raise NotImplementedError(
+                "zstd dictionaries are not supported") from e
+        if "Unknown frame descriptor" in msg:
+            msg = f"bad magic ({msg})"
+        raise ValueError(f"zstd: {msg}") from e

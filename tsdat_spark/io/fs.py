@@ -102,11 +102,6 @@ def get_filesystem(path: str) -> FileSystem:
     return fs
 
 
-def strip_scheme(path: str) -> str:
-    """Local paths may arrive as file:// URIs from Spark file listings."""
-    return path[7:] if path.startswith("file://") else path
-
-
 def write_binary_parts(df, path: str, render_blob, partitions: int | None = None,
                        suffix: str = ".nc") -> list:
     """Task-side part writes for whole-file binary sinks (NetCDF-3/4).

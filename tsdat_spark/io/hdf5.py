@@ -22,7 +22,7 @@ latest/_f_m_t3.html) that NetCDF-4 writers actually produce:
 - data layouts: compact, contiguous, v3 chunked (B-tree v1) and v4
   chunked (single-chunk and implicit index)
 - filter pipeline v1/v2: deflate (stdlib zlib), shuffle, fletcher32
-  (checksum stripped), zstd (filter 32015, from-spec ``compress/zstd``),
+  (checksum stripped), zstd (filter 32015, libzstd via ``compress/zstd``),
   bitshuffle (filter 32008, plain or LZ4/zstd-framed, from-spec
   ``compress/bitshuffle``); other filters raise with the filter id
 - global heap (``GCOL``) for VLEN attribute/dataset payloads
@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -61,13 +61,6 @@ class _Dataset:
     attrs: dict
     fillvalue: object = None
     addr: int = -1
-
-
-@dataclass
-class _File:
-    data: bytes
-    datasets: dict = field(default_factory=dict)
-    root_attrs: dict = field(default_factory=dict)
 
 
 def _u(data, off, n):

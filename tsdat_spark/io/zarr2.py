@@ -12,8 +12,8 @@ store uses:
   ``blosc`` (the zarr-python v2 default, used by the reference's test
   fixture) via the from-spec pure-Python container codec in
   ``compress/bloscc.py`` (lz4 + byte- or bit-shuffle, the latter via
-  ``compress/bitshuffle.py``), and ``zstd`` (from-spec RFC 8878 decoder;
-  writes are store-mode raw/RLE frames — ``compress/zstd.py``).
+  ``compress/bitshuffle.py``), and ``zstd`` (pyarrow's bundled libzstd,
+  ``compress/zstd.py``).
 - v3 codec chains: ``bytes`` (little-endian) + ``gzip``/``zstd``/
   ``blosc``/``crc32c`` (verified); regular chunk grids, default
   and v2 chunk-key encodings.
@@ -94,11 +94,7 @@ def _compress(raw: bytes, compressor: dict | None, typesize: int = 1) -> bytes:
     if cid == "zstd":
         from ..compress.zstd import zstd_compress
 
-        # Entropy-coded frames (LZ77 + Huffman + FSE, compress/zstd.py):
-        # real compression at ~1-3 MB/s/task pure-Python cost. Writers
-        # needing guaranteed-linear speed over ratio can swap in
-        # zstd_compress_store (valid frames, ~store-size output).
-        return zstd_compress(raw)
+        return zstd_compress(raw)  # libzstd level 3 (v3 metadata: level 0)
     raise ValueError(f"unsupported zarr compressor {cid!r}")
 
 

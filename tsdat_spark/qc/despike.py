@@ -168,7 +168,7 @@ def check_goring_nikora(
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from ..rollup.tiers import _group_slices
+    from ..grouping import group_slices
 
     out_col = out_col or f"qc_gn_{var}"
     keys = list(series_keys)
@@ -193,7 +193,7 @@ def check_goring_nikora(
             return
         pdf = pd.concat(chunks, ignore_index=True)
         pdf = pdf.sort_values([*part_keys, "__x"], kind="stable", ignore_index=True)
-        pdf, gstarts, gends = _group_slices(pdf, part_keys)
+        pdf, gstarts, gends = group_slices(pdf, part_keys)
         vals = pdf[var].to_numpy(np.float64, na_value=np.nan)
         mask = np.zeros(len(pdf), dtype=bool)
         for s, e in zip(gstarts, gends):

@@ -99,7 +99,7 @@ def cubic_spline_interp(
     import numpy as np
     import pandas as pd
 
-    from ..rollup.tiers import _group_slices
+    from ..grouping import group_slices
     from .spline import cubic_spline_fill
 
     keys = list(series_keys)
@@ -117,10 +117,10 @@ def cubic_spline_interp(
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
-        # sort by (keys, x); _group_slices re-sorts by keys only (stable), so
+        # sort by (keys, x); group_slices re-sorts by keys only (stable), so
         # within-group x order is preserved and boundaries come for free
         pdf = pdf.sort_values([*keys, "__x"], kind="stable", ignore_index=True)
-        pdf, gstarts, gends = _group_slices(pdf, keys)
+        pdf, gstarts, gends = group_slices(pdf, keys)
         x = pdf["__x"].to_numpy(np.float64)
         y = pdf[var].to_numpy(np.float64, na_value=np.nan)
         m = pdf["__fail"].to_numpy(bool)

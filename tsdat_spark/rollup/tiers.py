@@ -10,27 +10,18 @@ computed by RE-AGGREGATING the finer tier (merge digests, add counts) —
 never by re-reading raw turns. This is the continuous-aggregate design of
 TimescaleDB/Druid-style rollup stores re-expressed on Spark.
 
-Two-phase skew-safe plan (tsdat has no notion of this; mandatory at 10^12
-turns):
+Plan: ``rollup_tier`` builds the finest tier from raw turns with one native
+Spark groupBy per (series, bin) — counts, token sums and each group's
+sorted latency list, partially aggregated map-side in the JVM — and then
+one ``mapInPandas`` finish that turns every latency list into a digest
+blob plus p50/p95. Coarser tiers come from ``reaggregate_tier`` over the
+finer tier: the same native groupBy adds counts and collects the finer
+digests, and one ``mapInPandas`` finish merges each group's blobs.
 
-  phase 1 — **map-side partial aggregation, zero shuffle**: one
-     ``mapInPandas`` pass over the natural input partitions; a pandas
-     groupby inside each Arrow batch emits one partial row
-     (count, sum, digest) per (series, bin) seen in that batch. A
-     mega-conversation is spread across many input partitions, so no task
-     ever holds a whole hot key — the partition index acts as the salt
-     (the generalized form of salted two-phase rollup; an explicit
-     ``salt`` column would only re-shuffle raw rows to achieve the same
-     partial independence this gets for free).
-  phase 2 — **merge, one small shuffle**: partials (≈ one row per
-     (series, bin) per upstream batch — orders of magnitude smaller than
-     the raw data) groupBy (series, bin) and merge: counts add, digests
-     merge associatively.
-
-Plain counts/sums are algebraic and Spark's hash aggregate would combine
-them map-side anyway; the pandas phases exist for the digest, which Spark
-has no built-in mergeable equivalent for (percentile_approx is not
-re-aggregable across tiers).
+Plain counts/sums are algebraic, so Spark's hash aggregate combines them
+map-side; the Python finish exists for the digest, which Spark has no
+built-in mergeable equivalent for (percentile_approx is not re-aggregable
+across tiers).
 """
 
 from __future__ import annotations
@@ -42,37 +33,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tdigest import TDigest, fast_bytes_from_sorted, fast_merge_bytes
-
 TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
 
 
-def _group_slices(pdf: pd.DataFrame, keys: list[str]):
-    """Sort so equal keys are adjacent; return (sorted pdf, group start
-    idx, group end idx).
-
-    Round 7: keys are factorized to int codes and ordered with one
-    ``np.lexsort`` — grouping only needs equal keys adjacent, not
-    lexicographic order, and an int lexsort beats ``sort_values`` over
-    object (string) columns by ~5-10x at tier-partition sizes. Nulls/NaT
-    factorize to one shared -1 code, preserving the old null==null
-    grouping. Boundaries come from the codes (factorize is exact), not a
-    per-column value compare."""
-    n = len(pdf)
-    codes = [pd.factorize(pdf[k], use_na_sentinel=True)[0] for k in keys]
-    order = np.lexsort(tuple(reversed(codes)))
-    pdf = pdf.iloc[order].reset_index(drop=True)
-    change = np.zeros(n - 1, dtype=bool)
-    for c in codes:
-        cs = c[order]
-        change |= cs[1:] != cs[:-1]
-    starts = np.concatenate([[0], np.flatnonzero(change) + 1])
-    ends = np.concatenate([starts[1:], [n]])
-    return pdf, starts, ends
-
-_PARTIAL_FIELDS = (
-    "n_turns long, token_len_sum long, n_latency long, latency_tdigest binary"
-)
 _FINAL_FIELDS = (
     "n_turns long, token_len_sum long, n_latency long, "
     "latency_p50 double, latency_p95 double, latency_tdigest binary"
@@ -87,50 +50,6 @@ def _tier_window(ts_col: str, tier: str):
 def _key_schema(df: DataFrame, keys: list[str]) -> str:
     by_name = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     return ", ".join(f"{k} {by_name[k]}" for k in keys)
-
-
-def _digest_of_group(lat: np.ndarray, compression: float) -> bytes:
-    return TDigest.from_values(lat, compression).to_bytes()
-
-
-def _merge_partials(partial: DataFrame, keys: list[str], final_schema: str, compression: float) -> DataFrame:
-    """Phase 2: hash-repartition partial rows on the group keys, then merge
-    each partition in ONE Python call (pd.concat + groupby) — one output
-    row per (series, bin), never a per-group Python invocation. Partial
-    rows are tiny (one per group per upstream batch), so whole-partition
-    concat is safe."""
-
-    def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [b for b in batches if not b.empty]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        pdf, starts, ends = _group_slices(pdf, keys)
-        blobs_in = pdf["latency_tdigest"].to_numpy()
-        out = pdf.iloc[starts][keys].reset_index(drop=True)
-        out["n_turns"] = np.add.reduceat(pdf["n_turns"].to_numpy(np.int64), starts)
-        out["token_len_sum"] = np.add.reduceat(pdf["token_len_sum"].to_numpy(np.int64), starts)
-        out["n_latency"] = np.add.reduceat(pdf["n_latency"].to_numpy(np.int64), starts)
-        p50, p95, blobs = [], [], []
-        for s, e in zip(starts, ends):
-            blob, (q50, q95) = fast_merge_bytes(blobs_in[s:e], compression)
-            p50.append(q50)
-            p95.append(q95)
-            blobs.append(blob)
-        out["latency_p50"] = p50
-        out["latency_p95"] = p95
-        out["latency_tdigest"] = blobs
-        yield out[[*keys, "n_turns", "token_len_sum", "n_latency",
-                   "latency_p50", "latency_p95", "latency_tdigest"]]
-
-    # Explicit partition count (= session shuffle partitions): repartition
-    # by columns alone is AQE-coalescible toward 64 MB targets, which
-    # serializes this Python-heavy merge stage onto a handful of cores at
-    # small-to-medium tier sizes. Partials have no residual skew (hot keys
-    # were already collapsed per upstream batch), so fixed-width hash
-    # partitioning is safe.
-    n_shuffle = int(partial.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return partial.repartition(n_shuffle, *keys).mapInPandas(merge_partition, final_schema)
 
 
 def rollup_tier(
