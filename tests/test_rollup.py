@@ -1,5 +1,5 @@
-"""Tier rollup: salted two-phase correctness, re-aggregation invariant,
-summary distinct counts."""
+"""Tier rollup: exact counts/sums, re-aggregation invariant, summary
+distinct counts."""
 
 import numpy as np
 import pytest
@@ -34,7 +34,7 @@ def t1m(turns):
 
 
 def test_counts_and_sums_exact(turns, t1m):
-    """Two-phase salted counts/sums == plain groupBy aggregates."""
+    """Tier counts/sums == plain groupBy aggregates."""
     expected = (
         turns.groupBy("conv_id", "tool", "role",
                       F.date_trunc("minute", "ts").alias("bin_start"))

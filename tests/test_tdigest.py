@@ -155,3 +155,18 @@ def test_batch_merge_blob_lists_parity():
         assert blobs[i] == ob, f"group {i}: blob bytes diverged"
         for a, b in ((oq50, p50[i]), (oq95, p95[i])):
             assert (a == b) or (np.isnan(a) and np.isnan(b)), f"group {i}: quantile {a} != {b}"
+
+
+@pytest.mark.parametrize("n", [0, 1, 399, 400, 401, 5000])
+def test_tdigest_view_is_the_tier_path(n):
+    """The TDigest class writes and merges exactly the blobs the tier hot
+    paths do (same compression rule, same layout), and rejects non-TD01
+    bytes."""
+    from tsdat_spark.rollup.tdigest import fast_bytes_from_sorted, fast_merge_bytes
+
+    v = np.random.RandomState(n).lognormal(3, 1, n)
+    assert TDigest.from_values(v).to_bytes() == fast_bytes_from_sorted(np.sort(v))
+    ds = [TDigest.from_values(p) for p in np.array_split(v, 3)]
+    assert TDigest.merge_all(ds).to_bytes() == fast_merge_bytes([d.to_bytes() for d in ds])[0]
+    with pytest.raises(ValueError):
+        TDigest.from_bytes(b"XXXX" + TDigest.from_values(v).to_bytes()[4:])

@@ -232,6 +232,20 @@ def test_hdf5_file_zstd_codec_roundtrip():
     np.testing.assert_array_equal(vs["value"]["array"], cols["value"])
 
 
+def test_hdf5_zstd_filter_records_the_encoding_level():
+    """Filter 32015's client data carries the level the chunks were
+    actually encoded at, not the deflate ``compress_level``."""
+    from tsdat_spark.compress import zstd
+    from tsdat_spark.io.hdf5 import _collect_links, _parse_object, _superblock_root
+    from tsdat_spark.io.hdf5_write import write_hdf5
+
+    cols = {"time": np.arange(300).astype("datetime64[us]"), "value": np.arange(300.0)}
+    blob = write_hdf5(cols, dim="time", chunk_rows=128, codec="zstd", compress_level=9)
+    links = dict(_collect_links(blob, _superblock_root(blob)))
+    ds, _ = _parse_object(blob, links["value"], "value")
+    assert dict(ds.filters)[32015] == (zstd.LEVEL,) == (zstd._CODEC.compression_level,)
+
+
 @pytest.mark.parametrize("zarr_format", [2, 3])
 def test_zarr_zstd_write_read_roundtrip(tmp_path, zarr_format, spark):
     """The engine's zarr sink can now emit zstd-compressed stores (the

@@ -14,7 +14,7 @@ time-series standardization framework, studied read-only at
   tsdat's transform_v2 overlap-weight semantics
   (``tsdat/transform_v2/utils/get_bound_overlaps.py:51-92``)
 - rollup: 1m/1h/1d continuous-aggregate retention tiers with mergeable
-  t-digest sketches and salted two-phase aggregation
+  t-digest sketches; each coarser tier merges the finer tier's digests
 - storage: partitioned parquet tier tables + per-partition lineage
   manifests and checkpoint/resume
 

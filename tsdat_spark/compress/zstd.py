@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import pyarrow as pa
 
-_CODEC = pa.Codec("zstd", compression_level=3)  # libzstd's default level
+LEVEL = 3  # libzstd's default level; HDF5 filter 32015 records it
+_CODEC = pa.Codec("zstd", compression_level=LEVEL)
 
 
 def zstd_compress(data: bytes) -> bytes:

@@ -125,6 +125,20 @@ def completed_partitions(table_path: str) -> dict[str, PartitionManifest]:
     return out
 
 
+def stale_partitions(
+    current: list[PartitionManifest], done: dict[str, PartitionManifest]
+) -> list[PartitionManifest]:
+    """The manifests in ``current`` whose day still needs work: a day is done
+    iff ``done`` (from :func:`completed_partitions`) holds a manifest for it
+    with the same input snapshot id."""
+    return [
+        m
+        for m in current
+        if (prev := done.get(m.partition)) is None
+        or prev.input_snapshot_id != m.input_snapshot_id
+    ]
+
+
 def resume_remaining(
     input_df: DataFrame,
     table_path: str,
@@ -134,18 +148,13 @@ def resume_remaining(
     """Filter the input down to days still needing work.
 
     Returns (filtered input, fresh input manifests for those days, skipped
-    day list). A day is done iff a manifest exists AND its input snapshot id
-    matches the current input fingerprint for that day.
+    day list), by :func:`stale_partitions`.
     """
     done = completed_partitions(table_path)
     current = partition_manifests(input_df, ts_col=ts_col, lineage_cols=lineage_cols)
-    todo, skipped = [], []
-    for m in current:
-        prev = done.get(m.partition)
-        if prev is not None and prev.input_snapshot_id == m.input_snapshot_id:
-            skipped.append(m.partition)
-        else:
-            todo.append(m)
+    todo = stale_partitions(current, done)
+    stale = {m.partition for m in todo}
+    skipped = [m.partition for m in current if m.partition not in stale]
     if not todo:
         return input_df.limit(0), [], skipped
     days = [m.partition for m in todo]

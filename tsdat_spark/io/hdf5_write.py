@@ -469,11 +469,13 @@ def _filters_shuffle_deflate(elem_size: int, level: int) -> bytes:
     return _msg(0x0B, struct.pack("<BB6x", 1, 2) + ent)
 
 
-def _filters_shuffle_zstd(elem_size: int, level: int) -> bytes:
+def _filters_shuffle_zstd(elem_size: int) -> bytes:
+    from ..compress.zstd import LEVEL  # the level zstd_compress encodes at
+
     name = b"zstd\x00\x00\x00\x00"  # padded to a multiple of 8
     ent = struct.pack("<HHHHI4x", 2, 0, 0, 1, elem_size)  # shuffle
     ent += struct.pack("<HHHH", 32015, len(name), 1, 1) + name
-    ent += struct.pack("<I4x", level)  # odd ncv: 4-byte pad
+    ent += struct.pack("<I4x", LEVEL)  # odd ncv: 4-byte pad
     return _msg(0x0B, struct.pack("<BB6x", 1, 2) + ent)
 
 
@@ -508,9 +510,10 @@ def write_hdf5(
     (the dimension scale stays contiguous, like netcdf-c); ``codec``
     selects shuffle+deflate (default), ``"bitshuffle_lz4"`` (registered
     filter 32008 with its LZ4 framing), or ``"zstd"`` (shuffle +
-    registered filter 32015). ``btree_node_size`` forces the dense link
-    index into a real multi-level v2 B-tree of that node size (None →
-    single grown leaf, the netcdf-c-sized shape)."""
+    registered filter 32015); ``compress_level`` is the deflate level.
+    ``btree_node_size`` forces the dense link index into a real
+    multi-level v2 B-tree of that node size (None → single grown leaf, the
+    netcdf-c-sized shape)."""
     if codec not in ("deflate", "bitshuffle_lz4", "zstd"):
         raise ValueError(f"unknown codec {codec!r}")
     global_attrs = dict(global_attrs or {})
@@ -679,7 +682,7 @@ def write_hdf5(
             if codec == "bitshuffle_lz4":
                 msgs.append(_filters_bitshuffle_lz4(es))
             elif codec == "zstd":
-                msgs.append(_filters_shuffle_zstd(es, compress_level))
+                msgs.append(_filters_shuffle_zstd(es))
             else:
                 msgs.append(_filters_shuffle_deflate(es, compress_level))
             msgs.append(_msg(0x08, struct.pack("<BBBQII", 3, 2, 2, data_addr,

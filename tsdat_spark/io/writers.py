@@ -87,8 +87,6 @@ def write_tier(
     df: DataFrame,
     path: str,
     ts_col: str = "bin_start",
-    mode: str = "overwrite",
-    partition_overwrite: bool = True,
     table_writer=None,
 ) -> None:
     """Write a tier table partitioned by days(ts_col).
@@ -108,10 +106,8 @@ def write_tier(
     if table_writer is not None:
         table_writer(out, path)
         return
-    writer = out.write.partitionBy(PARTITION_COL).mode(mode)
-    if partition_overwrite:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.parquet(path)
+    (out.write.partitionBy(PARTITION_COL).mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic").parquet(path))
     fs = _sidecar_fs(path)
     if fs is not None:
         fs.write_text(posixpath.join(path, SCHEMA_SIDECAR),

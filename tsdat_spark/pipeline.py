@@ -29,7 +29,12 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .config import DatasetSpec
-from .io.checkpoint import completed_partitions, partition_manifests, write_manifests
+from .io.checkpoint import (
+    completed_partitions,
+    partition_manifests,
+    stale_partitions,
+    write_manifests,
+)
 from .io.writers import PARTITION_COL, read_tier, write_tier
 from .qc.checkers import QCContext
 from .qc.manager import QualityManager, apply_qc
@@ -165,12 +170,7 @@ def run_rollup_job(
     per_tier_todo: dict[str, list] = {}
     for tier in tiers:
         done = completed_partitions(f"{out_root}/tier_{tier}")
-        per_tier_todo[tier] = [
-            m
-            for m in current
-            if (prev := done.get(m.partition)) is None
-            or prev.input_snapshot_id != m.input_snapshot_id
-        ]
+        per_tier_todo[tier] = stale_partitions(current, done)
     todo_days_any = {m.partition for t in tiers for m in per_tier_todo[t]}
     result = RollupJobResult(
         skipped_days=sorted(m.partition for m in current if m.partition not in todo_days_any)

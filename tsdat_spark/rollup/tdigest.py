@@ -10,7 +10,7 @@ Why this exists: the tier cascade (1m → 1h → 1d) must re-aggregate
 latency percentiles WITHOUT re-reading raw turns; exact percentiles are not
 mergeable, t-digests are (merge = concat centroids + recompress, associative
 up to sketch error). Serialized digests ride along tier rows as a binary
-column; merging happens in Arrow-vectorized applyInPandas stages.
+column; merging happens in one Arrow-vectorized mapInPandas finish per tier.
 
 The build is vectorized: sort once, take cumulative weights, map to k-space,
 and cut clusters where ⌊k⌋ advances — ``np.add.reduceat`` does all
@@ -26,140 +26,96 @@ from dataclasses import dataclass
 import numpy as np
 
 _MAGIC = b"TD01"
-
-
-@dataclass
-class TDigest:
-    means: np.ndarray  # float64, sorted ascending
-    weights: np.ndarray  # float64, > 0
-    min_val: float
-    max_val: float
-    compression: float = 100.0
-
-    # -- construction -------------------------------------------------------
-
-    @staticmethod
-    def empty(compression: float = 100.0) -> "TDigest":
-        return TDigest(np.empty(0), np.empty(0), np.inf, -np.inf, compression)
-
-    @staticmethod
-    def from_values(values: np.ndarray, compression: float = 100.0) -> "TDigest":
-        v = np.asarray(values, dtype=np.float64)
-        v = v[~np.isnan(v)]
-        if v.size == 0:
-            return TDigest.empty(compression)
-        v = np.sort(v)
-        means, weights = _compress(v, np.ones_like(v), compression)
-        return TDigest(means, weights, float(v[0]), float(v[-1]), compression)
-
-    @staticmethod
-    def merge_all(digests: list["TDigest"], compression: float | None = None) -> "TDigest":
-        digests = [d for d in digests if d.weights.size]
-        if not digests:
-            return TDigest.empty(compression or 100.0)
-        comp = compression or digests[0].compression
-        means = np.concatenate([d.means for d in digests])
-        weights = np.concatenate([d.weights for d in digests])
-        order = np.argsort(means, kind="mergesort")
-        means, weights = _compress(means[order], weights[order], comp)
-        return TDigest(
-            means,
-            weights,
-            min(d.min_val for d in digests),
-            max(d.max_val for d in digests),
-            comp,
-        )
-
-    # -- queries -------------------------------------------------------------
-
-    @property
-    def total_weight(self) -> float:
-        return float(self.weights.sum())
-
-    def quantile(self, q: float) -> float:
-        """Standard t-digest quantile: linear interpolation between centroid
-        means at cumulative mid-weights, clamped to observed min/max."""
-        n = self.weights.size
-        if n == 0:
-            return float("nan")
-        if n == 1:
-            return float(self.means[0])
-        W = self.weights.sum()
-        target = q * W
-        cum = np.cumsum(self.weights) - self.weights / 2.0
-        if target <= cum[0]:
-            # interpolate between true min and first centroid
-            frac = target / cum[0] if cum[0] > 0 else 0.0
-            est = (1.0 - frac) * self.min_val + frac * self.means[0]
-            return float(min(max(est, self.min_val), self.max_val))
-        if target >= cum[-1]:
-            denom = W - cum[-1]
-            frac = (target - cum[-1]) / denom if denom > 0 else 0.0
-            est = (1.0 - frac) * self.means[-1] + frac * self.max_val
-            return float(min(max(est, self.min_val), self.max_val))
-        idx = np.searchsorted(cum, target) - 1
-        span = cum[idx + 1] - cum[idx]
-        frac = (target - cum[idx]) / span if span > 0 else 0.0
-        # (1-f)*a + f*b, not a + f*(b-a): the latter cancels the small mean
-        # when |a| >> |b| and f~1, escaping [min,max] by ~1 ulp of a.
-        est = (1.0 - frac) * self.means[idx] + frac * self.means[idx + 1]
-        return float(min(max(est, self.min_val), self.max_val))
-
-    # -- serialization --------------------------------------------------------
-
-    def to_bytes(self) -> bytes:
-        header = struct.pack("<4sdddI", _MAGIC, self.compression, self.min_val, self.max_val, self.means.size)
-        return header + self.means.astype("<f8").tobytes() + self.weights.astype("<f8").tobytes()
-
-    @staticmethod
-    def from_bytes(data: bytes) -> "TDigest":
-        magic, comp, mn, mx, n = struct.unpack_from("<4sdddI", data, 0)
-        if magic != _MAGIC:
-            raise ValueError("not a TD01 t-digest blob")
-        off = struct.calcsize("<4sdddI")
-        means = np.frombuffer(data, dtype="<f8", count=n, offset=off).copy()
-        weights = np.frombuffer(data, dtype="<f8", count=n, offset=off + 8 * n).copy()
-        return TDigest(means, weights, mn, mx, comp)
-
-
-# ---------------------------------------------------------------------------
-# Hot-path helpers for the tier rollup: at 1m grain the group count is close
-# to the row count, so per-group cost is the whole game. These avoid class
-# construction and skip compression while a group is small (raw sorted
-# values are themselves valid unit-weight centroids — compression only
-# matters once n ≫ δ).
-# ---------------------------------------------------------------------------
-
 _HEADER = struct.Struct("<4sdddI")
 
 
-def fast_bytes_from_sorted(v: np.ndarray, compression: float = 100.0) -> bytes:
-    """Digest blob from an ALREADY nan-free, sorted float64 array."""
-    n = v.size
-    if n == 0:
-        return _HEADER.pack(_MAGIC, compression, np.inf, -np.inf, 0)
-    if n > 4 * compression:
-        means, weights = _compress(v, np.ones_like(v), compression)
-    else:
-        means, weights = v, np.ones_like(v)
+def _pack(compression: float, mn: float, mx: float, means: np.ndarray, weights: np.ndarray) -> bytes:
+    """The blob layout: TD01 header, then the means, then the weights."""
     return (
-        _HEADER.pack(_MAGIC, compression, float(v[0]), float(v[-1]), means.size)
+        _HEADER.pack(_MAGIC, compression, mn, mx, means.size)
         + means.astype("<f8").tobytes()
         + weights.astype("<f8").tobytes()
     )
 
 
 def _parse(blob: bytes):
+    """Blob → (means, weights, min, max, compression); the arrays are
+    read-only views into ``blob``."""
     magic, comp, mn, mx, n = _HEADER.unpack_from(blob, 0)
+    if magic != _MAGIC:
+        raise ValueError("not a TD01 t-digest blob")
     off = _HEADER.size
     means = np.frombuffer(blob, dtype="<f8", count=n, offset=off)
     weights = np.frombuffer(blob, dtype="<f8", count=n, offset=off + 8 * n)
-    return means, weights, mn, mx
+    return means, weights, mn, mx, comp
+
+
+def _empty_blob(compression: float) -> bytes:
+    return _pack(compression, np.inf, -np.inf, np.empty(0), np.empty(0))
+
+
+@dataclass
+class TDigest:
+    """Decoded view of one digest blob; every method goes through the same
+    functions that write and read tier rows."""
+
+    means: np.ndarray  # float64, sorted ascending
+    weights: np.ndarray  # float64, > 0
+    min_val: float
+    max_val: float
+    compression: float = 100.0
+
+    @staticmethod
+    def empty(compression: float = 100.0) -> "TDigest":
+        return TDigest.from_bytes(_empty_blob(compression))
+
+    @staticmethod
+    def from_values(values: np.ndarray, compression: float = 100.0) -> "TDigest":
+        v = np.asarray(values, dtype=np.float64)
+        return TDigest.from_bytes(fast_bytes_from_sorted(np.sort(v[~np.isnan(v)]), compression))
+
+    @staticmethod
+    def merge_all(digests: list["TDigest"], compression: float | None = None) -> "TDigest":
+        comp = compression or next((d.compression for d in digests if d.weights.size), 100.0)
+        return TDigest.from_bytes(fast_merge_bytes([d.to_bytes() for d in digests], comp)[0])
+
+    @property
+    def total_weight(self) -> float:
+        return float(self.weights.sum())
+
+    def quantile(self, q: float) -> float:
+        return _quantiles_from_centroids(self.means, self.weights, self.min_val, self.max_val, (q,))[0]
+
+    def to_bytes(self) -> bytes:
+        return _pack(self.compression, self.min_val, self.max_val, self.means, self.weights)
+
+    @staticmethod
+    def from_bytes(data: bytes) -> "TDigest":
+        means, weights, mn, mx, comp = _parse(data)
+        return TDigest(means.copy(), weights.copy(), mn, mx, comp)
+
+
+# ---------------------------------------------------------------------------
+# Hot-path helpers for the tier rollup: at 1m grain the group count is close
+# to the row count, so per-group cost is the whole game. These avoid class
+# construction; raw sorted values are themselves valid unit-weight centroids,
+# so compression only starts above 4·δ values (see ``_compress``).
+# ---------------------------------------------------------------------------
+
+
+def fast_bytes_from_sorted(v: np.ndarray, compression: float = 100.0) -> bytes:
+    """Digest blob from an ALREADY nan-free, sorted float64 array."""
+    if v.size == 0:
+        return _empty_blob(compression)
+    means, weights = _compress(v, np.ones_like(v), compression)
+    return _pack(compression, float(v[0]), float(v[-1]), means, weights)
 
 
 def _quantiles_from_centroids(
     means: np.ndarray, weights: np.ndarray, mn: float, mx: float, qs: tuple[float, ...]
 ) -> list[float]:
+    """Standard t-digest quantiles: linear interpolation between centroid
+    means at cumulative mid-weights, clamped to the observed min/max."""
     n = means.size
     if n == 0:
         return [float("nan")] * len(qs)
@@ -181,6 +137,8 @@ def _quantiles_from_centroids(
             idx = np.searchsorted(cum, target) - 1
             span = cum[idx + 1] - cum[idx]
             frac = (target - cum[idx]) / span if span > 0 else 0.0
+            # (1-f)*a + f*b, not a + f*(b-a): the latter cancels the small
+            # mean when |a| >> |b| and f~1, escaping [min,max] by ~1 ulp of a.
             est = (1.0 - frac) * means[idx] + frac * means[idx + 1]
         out.append(float(min(max(est, mn), mx)))
     return out
@@ -192,27 +150,19 @@ def fast_merge_bytes(
     """Merge digest blobs; returns (merged blob, quantiles). Single-blob
     groups (the common tier case) skip the re-sort entirely."""
     if len(blobs) == 1:
-        means, weights, mn, mx = _parse(blobs[0])
+        means, weights, mn, mx, _ = _parse(blobs[0])
         return bytes(blobs[0]), _quantiles_from_centroids(means, weights, mn, mx, qs)
     parsed = [_parse(b) for b in blobs]
     parsed = [p for p in parsed if p[0].size]
     if not parsed:
-        empty = _HEADER.pack(_MAGIC, compression, np.inf, -np.inf, 0)
-        return empty, [float("nan")] * len(qs)
+        return _empty_blob(compression), [float("nan")] * len(qs)
     means = np.concatenate([p[0] for p in parsed])
     weights = np.concatenate([p[1] for p in parsed])
     order = np.argsort(means, kind="mergesort")
-    means, weights = means[order], weights[order]
+    means, weights = _compress(means[order], weights[order], compression)
     mn = min(p[2] for p in parsed)
     mx = max(p[3] for p in parsed)
-    if means.size > 4 * compression:
-        means, weights = _compress(means, weights, compression)
-    blob = (
-        _HEADER.pack(_MAGIC, compression, mn, mx, means.size)
-        + means.astype("<f8").tobytes()
-        + weights.astype("<f8").tobytes()
-    )
-    return blob, _quantiles_from_centroids(means, weights, mn, mx, qs)
+    return _pack(compression, mn, mx, means, weights), _quantiles_from_centroids(means, weights, mn, mx, qs)
 
 
 def batch_merge_blob_lists(
@@ -298,12 +248,14 @@ def _k(q: np.ndarray, compression: float) -> np.ndarray:
 
 def _compress(means: np.ndarray, weights: np.ndarray, compression: float):
     """Cluster sorted (mean, weight) pairs so each cluster spans ≤1 unit of
-    the k1 scale. Fully vectorized: cluster ids come from the floor of the
-    k-value at each pair's *left* cumulative weight; per-cluster weighted
-    means via np.add.reduceat."""
+    the k1 scale — but only above 4·δ pairs; up to that the pairs are
+    returned as they are (the one compression rule every blob follows).
+    Fully vectorized: cluster ids come from the floor of the k-value at
+    each pair's *left* cumulative weight; per-cluster weighted means via
+    np.add.reduceat."""
+    if means.size <= 4 * compression:
+        return means, weights
     W = weights.sum()
-    if means.size <= 1 or W <= 0:
-        return means.copy(), weights.copy()
     q_left = (np.cumsum(weights) - weights) / W
     k_left = _k(q_left, compression)
     # new cluster whenever floor(k_left) advances
@@ -315,6 +267,7 @@ def _compress(means: np.ndarray, weights: np.ndarray, compression: float):
     w_sum = np.add.reduceat(weights, starts)
     m_sum = np.add.reduceat(weights * means, starts)
     return m_sum / w_sum, w_sum
+
 
 _EMPTY_ONES_CACHE: dict[int, bytes] = {}
 
@@ -347,14 +300,14 @@ def batch_digests_from_sorted(arrs, compression: float = 100.0,
     limit = 4 * compression
     out_q = [np.full(N, np.nan) for _ in qs]
     blobs: list[bytes] = [b""] * N
-    empty_blob = _HEADER.pack(_MAGIC, compression, np.inf, -np.inf, 0)
+    empty_blob = _empty_blob(compression)
 
     big = lens > limit
     for i in np.flatnonzero(big):
         v = arrs[i]
         b = fast_bytes_from_sorted(v, compression)
         blobs[i] = b
-        m, w, mn, mx = _parse(b)
+        m, w, mn, mx, _ = _parse(b)
         for j, q in enumerate(_quantiles_from_centroids(m, w, mn, mx, qs)):
             out_q[j][i] = q
 

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tdigest import batch_digests_from_sorted, batch_merge_blob_lists
+
 TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
 
 
@@ -52,6 +54,30 @@ def _key_schema(df: DataFrame, keys: list[str]) -> str:
     return ", ".join(f"{k} {by_name[k]}" for k in keys)
 
 
+def _tier(df: DataFrame, series_keys: list[str], tier: str, aggs: list, digest) -> DataFrame:
+    """The one tier plan: a native groupBy on (series, bin_start) computing
+    ``aggs`` (n_turns, token_len_sum, n_latency and a ``__digest_in``
+    column), one mapInPandas finish where ``digest(pdf)`` turns each
+    batch's ``__digest_in`` into (blobs, (p50s, p95s)), then ``bin_end``."""
+    keys = [*series_keys, "bin_start"]
+    schema = f"{_key_schema(df, series_keys)}, bin_start timestamp, {_FINAL_FIELDS}"
+
+    def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            blobs, (p50, p95) = digest(pdf)
+            out = pdf[[*keys, "n_turns", "token_len_sum", "n_latency"]].copy()
+            out["latency_p50"] = p50
+            out["latency_p95"] = p95
+            out["latency_tdigest"] = blobs
+            yield out
+
+    out = df.groupBy(*keys).agg(*aggs).mapInPandas(finish, schema)
+    secs = TIER_SECONDS[tier]
+    return out.withColumn("bin_end", F.col("bin_start") + F.expr(f"INTERVAL {secs} SECOND"))
+
+
 def rollup_tier(
     df: DataFrame,
     tier: str,
@@ -64,65 +90,41 @@ def rollup_tier(
 ) -> DataFrame:
     """Raw turns → one tier.
 
-    Round-7 shape (guide §2.3 "aggregate before you shuffle" + §4.1):
-    counts/sums/sorted-latency-lists are ONE native Spark aggregation
-    (map-side partial agg in the JVM — the raw 7M-row Arrow round trip of
-    the old pandas phase 1 disappears), and a single mapInPandas finish
-    stage builds the digest blob + quantiles per group with the batch-
-    vectorized helper (``tdigest.batch_digests_from_sorted``). Plan: scan →
+    Counts, token sums and each group's sorted latency list are ONE native
+    Spark aggregation (map-side partial aggregation in the JVM), and the
+    mapInPandas finish builds every group's digest blob + quantiles with
+    the batch-vectorized ``tdigest.batch_digests_from_sorted``. Plan: scan →
     hash-aggregate (partial) → exchange on the group keys → hash-aggregate
-    (final) → one Python stage over group-grain rows. Was: scan → Arrow →
-    pandas phase 1 → exchange → Arrow → pandas phase 2.
+    (final) → one Python stage over group-grain rows.
 
-    Digest parity: ``sort_array(collect_list)`` delivers each group's
-    non-null latencies sorted, so unit-weight blobs (every group at fine
-    tier grain, n <= 4·compression) are byte-identical to the old
-    two-phase merge; oversized groups are now digested from ALL their
-    values directly — at least as accurate as merging per-batch partials
-    (the bracket invariants pytest asserts are unchanged).
+    ``sort_array(collect_list)`` delivers each group's non-null latencies
+    sorted; groups of more than 4·compression values are compressed from
+    all their values at once.
 
-    Scale note: the exchange carries each latency value once (8 B), vs the
-    old per-(group, upstream-batch) partial blobs — equivalent at fine
-    grain where groups are near-singletons. Coarse tiers over mega-series
-    should be produced by ``reaggregate_tier`` from a finer tier (the
-    engine's documented cascade), which still merges bounded partials.
+    Scale note: the exchange carries each latency value once (8 B), and the
+    whole list of a group sits in one buffer. Coarse tiers over
+    mega-series should be produced by ``reaggregate_tier`` from a finer
+    tier (the engine's documented cascade), which merges bounded digests.
     """
     series_keys = list(series_keys)
-    secs = TIER_SECONDS[tier]
     binned = df.select(
         *series_keys,
         _tier_window(ts_col, tier).alias("bin_start"),
         F.col(token_col).alias("__tok"),
         F.col(latency_col).cast("double").alias("__lat"),
     )
-
-    keys = [*series_keys, "bin_start"]
-    key_schema = _key_schema(binned, series_keys)
-    final_schema = f"{key_schema}, bin_start timestamp, {_FINAL_FIELDS}"
-
-    agg = binned.groupBy(*keys).agg(
+    aggs = [
         F.count(F.lit(1)).alias("n_turns"),
         F.coalesce(F.sum("__tok"), F.lit(0)).cast("long").alias("token_len_sum"),
         F.count("__lat").alias("n_latency"),
-        F.sort_array(F.collect_list("__lat")).alias("__lats"),
-    )
+        F.sort_array(F.collect_list("__lat")).alias("__digest_in"),
+    ]
 
-    def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .tdigest import batch_digests_from_sorted
+    def digest(pdf: pd.DataFrame):
+        arrs = [np.asarray(a, dtype=np.float64) for a in pdf["__digest_in"]]
+        return batch_digests_from_sorted(arrs, compression)
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            arrs = [np.asarray(a, dtype=np.float64) for a in pdf["__lats"]]
-            blobs, (p50, p95) = batch_digests_from_sorted(arrs, compression)
-            out = pdf[[*keys, "n_turns", "token_len_sum", "n_latency"]].copy()
-            out["latency_p50"] = p50
-            out["latency_p95"] = p95
-            out["latency_tdigest"] = blobs
-            yield out
-
-    out = agg.mapInPandas(finish, final_schema)
-    return out.withColumn("bin_end", F.col("bin_start") + F.expr(f"INTERVAL {secs} SECOND"))
+    return _tier(binned, series_keys, tier, aggs, digest)
 
 
 def reaggregate_tier(
@@ -136,49 +138,26 @@ def reaggregate_tier(
     Verifiable invariant (tested): re-aggregation equals the direct rollup
     of the raw data up to t-digest sketch error; counts/sums are exact.
 
-    Round-7 shape (guide §2.3): counts/sums and blob collection are ONE
-    native Spark aggregation (JVM partial agg, no fine-tier-grain Arrow
-    round trip); the Python stage then merges each group's blob list at
-    COARSE-group grain — ~input/output-ratio fewer rows cross the Python
-    boundary than the old repartition→concat→sort→merge pandas pass.
+    Counts/sums and the finer digests are ONE native Spark aggregation, so
+    the Python finish sees coarse-group grain rows and merges each group's
+    blob list with ``tdigest.batch_merge_blob_lists``: groups whose total
+    value count is within the unit-weight limit ride its vectorized
+    sorted-values path, the rest fall back to per-group
+    ``fast_merge_bytes`` — byte-identical either way.
     """
     series_keys = list(series_keys)
-    secs = TIER_SECONDS[to_tier]
     df = tier_df.withColumn("bin_start", _tier_window("bin_start", to_tier))
-    keys = [*series_keys, "bin_start"]
-
-    key_schema = _key_schema(df, series_keys)
-    final_schema = f"{key_schema}, bin_start timestamp, {_FINAL_FIELDS}"
-
-    agg = df.groupBy(*keys).agg(
+    aggs = [
         F.sum("n_turns").alias("n_turns"),
         F.sum("token_len_sum").alias("token_len_sum"),
         F.sum("n_latency").alias("n_latency"),
-        F.collect_list("latency_tdigest").alias("__blobs"),
-    )
+        F.collect_list("latency_tdigest").alias("__digest_in"),
+    ]
 
-    def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .tdigest import batch_merge_blob_lists
+    def digest(pdf: pd.DataFrame):
+        return batch_merge_blob_lists(list(pdf["__digest_in"]), pdf["n_latency"].to_numpy(), compression)
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # batch merge (round 7): groups whose total value count is
-            # within the unit-weight limit ride the vectorized
-            # sorted-values path; the rest fall back to per-group
-            # fast_merge_bytes inside the helper — byte-identical either
-            # way (see batch_merge_blob_lists)
-            blobs, (p50s, p95s) = batch_merge_blob_lists(
-                list(pdf["__blobs"]), pdf["n_latency"].to_numpy(), compression
-            )
-            out = pdf[[*keys, "n_turns", "token_len_sum", "n_latency"]].copy()
-            out["latency_p50"] = p50s
-            out["latency_p95"] = p95s
-            out["latency_tdigest"] = blobs
-            yield out
-
-    out = agg.mapInPandas(finish, final_schema)
-    return out.withColumn("bin_end", F.col("bin_start") + F.expr(f"INTERVAL {secs} SECOND"))
+    return _tier(df, series_keys, to_tier, aggs, digest)
 
 
 def tier_summary(

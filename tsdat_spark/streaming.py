@@ -5,7 +5,7 @@ to keep the 1m/1h/1d retention tiers fresh against a continuously-landing
 transcript stream is:
 
 1. **Append mergeable partials** (:func:`stream_append_tier`): a
-   ``foreachBatch`` sink runs the SAME two-phase ``rollup_tier`` program on
+   ``foreachBatch`` sink runs the SAME ``rollup_tier`` program on
    each micro-batch and APPENDS the resulting tier rows. Because every tier
    row is a mergeable partial (counts add, t-digests merge — see
    ``rollup/tdigest.py``), a tier table with duplicate (series, bin) keys is

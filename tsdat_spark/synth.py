@@ -10,7 +10,7 @@ generation itself scales linearly and is partition-count independent
 Injected anomalies (FIXTURES.md F1 requirements, exercised by the QC tests):
 
 - **skew**: the first ``n_mega`` conversations have ``mega_turns`` turns each
-  (mega-conversations, the hot keys the salted rollup must handle);
+  (mega-conversations, the hot keys the rollup must handle);
 - **out-of-order ts** within a conversation (CheckMonotonic targets);
 - **gaps** larger than the tier width (gap-fill targets);
 - **null / empty text** (CheckMissing targets);
